@@ -36,13 +36,18 @@ DRIVER_WINDOW: tuple[str, ...] = (
     # (sources/writers.py) and the streaming sink job cuts cover the
     # six maintenance/incremental drives; the lazy local-checkpoint
     # conversions cover the components family, pagerank/bfs, the
-    # two-pass rank pair and the BPE pair.
+    # two-pass rank pair and the BPE pair. The erase and compaction
+    # drives joined the lead when the hive writers moved to one
+    # partition rule (a value is its directory name), displacing the
+    # last two stalest-green names.
     "stream_rank_maintenance",
     "stream_rank_repair",
     "stream_agg_maintenance",
     "stream_gold_incremental",
     "stream_cdc_incremental",
     "stream_image_dedup_incremental",
+    "warehouse_erase_rtbf",
+    "warehouse_compact_small_files",
     "er_resolved_entities",
     "graph_part_pagerank",
     "graph_part_bfs_hops",
@@ -88,8 +93,6 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "stream_session_window_stats",
     "stream_sliding_window_counts",
     "stream_stream_click_attribution",
-    "stream_tumbling_daily_counts",
-    "text_bpe_token_count",
 
     # -- displaced: the r14 window (all driver-proven r14); all remain
     # verifiable via tools/check_oracle.py.

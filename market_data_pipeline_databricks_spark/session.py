@@ -13,10 +13,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults sized for the local[32] / 128 GiB test box. On a real cluster
-# leave master/memory to spark-submit and keep only the sql.* knobs.
+# Local width: the cores this process may run on, unless the deployment
+# overrides it with SPARK_GRAFT_CPUS. On a real cluster leave
+# master/memory to spark-submit and keep only the sql.* knobs.
+_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
 _DEFAULTS = {
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    "spark.sql.shuffle.partitions": _CPUS,
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -54,15 +57,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the configured SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when no cluster
-    manager is configured; on a real deployment pass ``None`` and let
-    spark-submit decide.
+    ``master`` defaults to ``local[N]`` with N the process's usable
+    cores (``SPARK_GRAFT_CPUS`` overrides) when no cluster manager is
+    configured; on a real deployment pass ``None`` and let spark-submit
+    decide.
     """
     builder = SparkSession.builder.appName(app_name)
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
-    builder = builder.master(master)
+    builder = builder.master(master or f"local[{_CPUS}]")
     conf = dict(_DEFAULTS)
     if extra_conf:
         conf.update(extra_conf)

@@ -4,7 +4,7 @@ DataFrame ops.
 
 The Delta/Iceberg core mechanic, rebuilt engine-side because
 delta-spark is uninstallable in this environment (BASELINE.md pip
-record; `sources/writers.py:merge_into_delta` activates when it lands):
+record):
 
 - data files are IMMUTABLE — every commit writes new files under
   ``data/commit-<uuid>/`` and never touches existing ones;

@@ -1,35 +1,44 @@
-"""Table sinks: overwrite, append, idempotent upsert (SURVEY §2.1 S5-S9).
+"""Table sinks: overwrite, append, keyed upsert, erase and compaction
+(SURVEY §2.1 S5-S9).
 
 The reference materializes through Delta Lake: ``MERGE INTO`` for bronze
 (reference 01_ingest_bronze.py:93-107), full overwrite for silver/gold
 (02_transform_silver.py:136-137, 03_aggregate_gold.py:82-95), append for
-the DQ log (04_data_quality_checks.py:147-156). OSS Spark in this
-container has no delta-spark package, so:
+the DQ log (04_data_quality_checks.py:147-156). Here every table is
+hive-partitioned parquet, and the MERGE is :func:`upsert_by_key`: anti-join
+the affected partitions' rows against the batch on the key, union the
+batch, and rewrite only those partitions (not the whole table — at
+100 TB a full rewrite per daily batch is unacceptable).
 
-- when ``delta`` is importable, ``upsert_by_key`` uses real
-  ``MERGE INTO`` (update-all-columns-on-match semantics, as the
-  reference does);
-- otherwise a parquet fallback preserves the same semantics:
-  anti-join existing rows against the update batch on the key, union
-  the batch, and rewrite only the *affected partitions* (not the whole
-  table — at 100 TB a full rewrite per daily batch is unacceptable).
+One partition rule for every rewrite (upsert, erase, compaction): a
+partition value IS its directory name. The existing table is read with
+each partition column pinned to ``StringType`` — the unescaped directory
+name, NULL for ``__HIVE_DEFAULT_PARTITION__`` — and the incoming batch's
+partition columns are cast to string, the cast the parquet writer names
+directories with. Rows written back therefore land in the directory
+they came from, whatever partition type inference would make of the name
+(``007`` is not 7, ``1.0E16`` is not ``1e+16``, ``true`` is not ``True``).
 
-Local-FS note: the fallback stages the merged partitions to a temp dir
-then swaps, because lazily re-reading a parquet dir while overwriting it
+Local-FS note: rewrites stage the new partitions to a temp dir and then
+swap, because lazily re-reading a parquet dir while overwriting it
 corrupts the scan. On a cluster with an object store use
-``partitionOverwriteMode=dynamic`` (set below) which scopes the
-overwrite to partitions present in the incoming frame.
+:func:`overwrite_partitions_dynamic` (``partitionOverwriteMode=dynamic``),
+which scopes the overwrite to partitions present in the incoming frame.
 """
 
 from __future__ import annotations
 
+import functools
+import math
+import operator
 import shutil
 import uuid
 from pathlib import Path
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 
 def _table_path(warehouse_dir: str, table: str) -> Path:
@@ -56,60 +65,95 @@ def append_table(
     writer.parquet(str(_table_path(warehouse_dir, table)))
 
 
-
-# Hive's directory name for a NULL partition value — both the
-# null-safe semi-joins and the emptied-partition cleanup must render
-# NULL this way or NULL-partition rows become invisible to targeted
-# rewrites (a right-to-erasure call would no-op on them).
+# Hive's directory name for a NULL (or empty-string) partition value.
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
-def _partition_tuple(row, partition_cols: list[str]) -> tuple[str, ...]:
-    return tuple(
-        _HIVE_NULL if row[c] is None else str(row[c]) for c in partition_cols
+def _dirname_reader(
+    spark: SparkSession, path: Path, partition_cols: list[str]
+) -> tuple[DataFrameReader, list[str]]:
+    """The one way the rewrite paths read an existing table: a reader
+    with every partition column pinned to ``StringType``, so a value is
+    its unescaped directory name (NULL for the hive default partition).
+    ``basePath`` keeps the partition columns when the reader is given
+    explicit leaf directories — the bounded read of a rewrite. Returns
+    the reader and the table's column order."""
+    inferred = spark.read.parquet(str(path)).schema
+    pinned = StructType([
+        StructField(f.name, StringType()) if f.name in partition_cols else f
+        for f in inferred
+    ])
+    reader = spark.read.schema(pinned).option("basePath", str(path))
+    return reader, pinned.fieldNames()
+
+
+def _as_dirnames(df: DataFrame, partition_cols: list[str]) -> DataFrame:
+    """``df`` with its partition columns cast to string — the cast the
+    parquet writer renders directory names with."""
+    return df.withColumns(
+        {c: F.col(c).cast("string") for c in partition_cols if c in df.columns}
     )
 
 
-def _fresh(small: DataFrame, cols: list[str]) -> DataFrame:
-    """Re-alias ``small``'s join columns to fresh names (and therefore
-    fresh expression IDs). When ``small`` DERIVES from the left frame —
-    ``erase_keys`` builds its touched-partition set from the table it
-    is erasing — ``df[c]`` and ``small[c]`` resolve to the SAME
-    attribute, the join condition degenerates to the trivially-true
-    ``c <=> c``, and the semi-join silently keeps every partition: the
-    erase stays CORRECT (the staged swap still only replaces touched
-    dirs) but rewrites the whole table into staging — the
-    bounded-rewrite contract broken without an error. Fresh aliases
-    make the condition refer to both sides unconditionally."""
-    return small.select([F.col(c).alias(f"__nss_{c}") for c in cols])
+def _touched(df: DataFrame, partition_cols: list[str]) -> set[tuple[str, ...]]:
+    """Distinct partition tuples of a dirname-string frame, as the
+    unescaped directory names they live under."""
+    return {
+        tuple(r[c] or _HIVE_NULL for c in partition_cols)
+        for r in df.select(*partition_cols).distinct().collect()
+    }
+
+
+def _leaf_partition_dirs(
+    root: Path, partition_cols: list[str]
+) -> dict[tuple[str, ...], Path]:
+    """Deepest ``col=value`` partition dirs under ``root``, keyed by
+    their unescaped directory-name tuple."""
+    level = [root]
+    for col in partition_cols:
+        level = [
+            child
+            for d in level
+            for child in d.iterdir()
+            if child.is_dir() and child.name.startswith(f"{col}=")
+        ]
+    return {
+        tuple(unquote(p.split("=", 1)[1]) for p in leaf.relative_to(root).parts): leaf
+        for leaf in level
+    }
+
+
+def _null_safe_join(
+    df: DataFrame, small: DataFrame, cols: list[str], how: str
+) -> DataFrame:
+    """Join ``df`` to broadcast ``small`` on ``cols`` with NULL = NULL
+    matching (a plain ``on=cols`` join never matches NULL, so NULL keys
+    and the NULL partition would silently drop out). Keeps ``df``'s
+    columns plus ``small``'s non-join columns.
+
+    ``small``'s join columns are re-aliased to fresh names (and
+    therefore fresh expression IDs) first: when ``small`` DERIVES from
+    ``df``, ``df[c]`` and ``small[c]`` resolve to the SAME attribute, the
+    condition degenerates to the trivially-true ``c <=> c`` and a semi
+    join silently keeps every row."""
+    fresh = small.select(
+        *(F.col(c).alias(f"__nss_{c}") for c in cols),
+        *(c for c in small.columns if c not in cols),
+    )
+    cond = functools.reduce(
+        operator.and_, (df[c].eqNullSafe(F.col(f"__nss_{c}")) for c in cols)
+    )
+    return df.join(F.broadcast(fresh), cond, how).drop(
+        *(f"__nss_{c}" for c in cols)
+    )
 
 
 def _null_safe_semi(df: DataFrame, small: DataFrame, cols: list[str]) -> DataFrame:
-    """left-semi join on ``cols`` that also matches NULL = NULL (the
-    plain on=cols join is null-unsafe, silently dropping NULL
-    partitions from the affected set)."""
-    cond = None
-    for c in cols:
-        eq = df[c].eqNullSafe(F.col(f"__nss_{c}"))
-        cond = eq if cond is None else (cond & eq)
-    return df.join(F.broadcast(_fresh(small, cols)), cond, "left_semi")
+    return _null_safe_join(df, small, cols, "left_semi")
 
 
 def _null_safe_anti(df: DataFrame, small: DataFrame, cols: list[str]) -> DataFrame:
-    """left-anti twin of :func:`_null_safe_semi` — keeps rows with NO
-    null-safe match in ``small`` (so a NULL key CAN be matched and
-    removed)."""
-    cond = None
-    for c in cols:
-        eq = df[c].eqNullSafe(F.col(f"__nss_{c}"))
-        cond = eq if cond is None else (cond & eq)
-    return df.join(F.broadcast(_fresh(small, cols)), cond, "left_anti")
-
-
-# Inspection hook for plan-capture tooling (plans/r15): when set to a
-# callable it receives the staged-write frame just before the write
-# executes. No effect in production (None).
-_STAGED_PLAN_HOOK = None
+    return _null_safe_join(df, small, cols, "left_anti")
 
 
 def upsert_by_key(
@@ -137,28 +181,26 @@ def upsert_by_key(
     without it a NULL-key state row silently duplicates on every
     upsert and downstream reads double-count the group.
 
-    A key may arrive with a *different* partition value than the row it
-    replaces (e.g. a corrected trade date on a date-partitioned table).
-    By default the old partition is located with a key semi-join against
-    the existing table and rewritten too, so the stale row is removed —
-    one extra scan of the table's key/partition columns. When partition
-    columns are functionally determined by the key (symbol partitioning
-    keyed on symbol — every table this pipeline ships), pass
-    ``stable_partitions=True`` to skip that scan: the batch's own
-    partition values are then provably the only ones affected.
+    Partitions follow the module's one rule: a partition value is its
+    directory name. The touched set is the batch's partition values
+    cast to string, collected once (one row per touched partition,
+    never row-scaled). A key may arrive with a *different* partition
+    value than the row it replaces (e.g. a corrected trade date on a
+    date-partitioned table): by default the partitions where the
+    batch's keys currently live join the touched set — one scan of the
+    table's key/partition columns — so the stale row is removed. When
+    partition columns are functionally determined by the key (symbol
+    partitioning keyed on symbol — every table this pipeline ships),
+    pass ``stable_partitions=True`` to skip that scan.
 
-    Scale shape of the staged write (r15): the touched-partition set is
-    collected once (partition-scaled, never row-scaled) and re-applied
-    to the existing table as a LITERAL partition predicate, so the scan
-    lists only the touched partitions' files (``PartitionFilters`` in
-    the plan) — the former broadcast semi-join read every partition and
-    filtered rows. Touched partitions with no live directory on disk
-    (a time-ordered stream appending new buckets — the common case)
-    need no merge at all: the existing-table scan, the key anti-join
-    and the union drop out of the plan entirely and the staged write is
-    a pure write of ``updates``. ``updates`` itself is persisted for
-    the call's duration: its plan feeds the touched-partition collect,
-    the key anti-join and the staged write, and without the persist a
+    Only the touched partitions that exist on disk are read, by their
+    leaf directories, so the scan never lists an untouched partition's
+    files. When none exists (a time-ordered stream appending new
+    buckets — the common case) the existing-table scan, the key
+    anti-join and the union drop out and the staged write is a pure
+    write of ``updates``. ``updates`` itself is persisted for the
+    call's duration: its plan feeds the touched-partition collect, the
+    key anti-join and the staged write, and without the persist a
     caller's expensive update plan re-executes once per consumer.
     """
     path = _table_path(warehouse_dir, table)
@@ -168,71 +210,19 @@ def upsert_by_key(
         overwrite_table(updates, warehouse_dir, table, partition_cols)
         return
 
-    existing = spark.read.parquet(str(path))
     updates = updates.persist()
     try:
         _upsert_staged(
-            spark, updates, existing, path, table, key_cols,
+            spark, updates, path, table, key_cols,
             partition_cols, stable_partitions, null_safe_keys,
         )
     finally:
         updates.unpersist()
 
 
-#: literal-predicate fallback cap: past this many touched partitions
-#: the OR-of-conjunctions plan text outgrows its benefit — use the
-#: broadcast semi-join instead (same result, row-level filter).
-_MAX_LITERAL_PARTITIONS = 512
-
-
-def _literal_ok(rows, partition_cols: list[str]) -> bool:
-    """True when every touched partition value renders identically via
-    ``str(v)`` (the tuple/dirname form) and Spark's ``cast(col as
-    string)`` — the equivalence the literal partition predicate relies
-    on. str/int/date values round-trip exactly; bool ('True' vs
-    'true'), float (scientific-notation forms) and timestamps do not
-    and fall back to the join path."""
-    import datetime as _dt
-
-    for r in rows:
-        for c in partition_cols:
-            v = r[c]
-            if v is None or isinstance(v, str):
-                continue
-            if isinstance(v, bool) or not isinstance(v, (int, _dt.date)):
-                return False
-            if isinstance(v, _dt.datetime):
-                return False
-    return True
-
-
-def _partition_pred(partition_cols: list[str], tuples):
-    """Static partition predicate for the touched set: OR over tuples
-    of AND over columns, compared on the string rendering (matching
-    ``_partition_tuple`` and the hive dir names — partition type
-    inference may read a day-grain value back as DATE and a bucket as
-    INT; the cast normalizes). References only partition attributes,
-    so Catalyst evaluates it against the partition spec at planning
-    time (``PartitionFilters``) and the scan never lists untouched
-    partitions' files."""
-    pred = F.lit(False)
-    for tup in sorted(tuples):
-        c = None
-        for col, v in zip(partition_cols, tup):
-            e = (
-                F.col(col).isNull()
-                if v == _HIVE_NULL
-                else (F.col(col).cast("string") == F.lit(v))
-            )
-            c = e if c is None else (c & e)
-        pred = pred | c
-    return pred
-
-
 def _upsert_staged(
     spark: SparkSession,
     updates: DataFrame,
-    existing: DataFrame,
     path: Path,
     table: str,
     key_cols: list[str],
@@ -240,85 +230,55 @@ def _upsert_staged(
     stable_partitions: bool,
     null_safe_keys: bool,
 ) -> None:
-    touched_tuples: set[tuple[str, ...]] | None = None
+    reader, columns = _dirname_reader(spark, path, partition_cols)
+    batch = _as_dirnames(updates, partition_cols).select(*columns)
+    key_set = batch.select(*key_cols).distinct()
+    touched: set[tuple[str, ...]] | None = None
     if partition_cols:
-        # Only partitions touched by the batch need rewriting; the rest
-        # of the table is untouched (scales: daily batch touches a few
-        # symbols out of millions of partitions).
-        touched = updates.select(*partition_cols).distinct()
+        scope = batch.select(*partition_cols)
         if not stable_partitions:
             # ...plus the partitions where updated keys CURRENTLY live,
             # so a key that moved partitions doesn't leave a duplicate
             # behind. Column-pruned scan: only key+partition columns.
-            upd_keys = updates.select(*key_cols).distinct()
+            existing = reader.parquet(str(path))
             prior = (
-                (
-                    _null_safe_semi(existing, upd_keys, key_cols)
-                    if null_safe_keys
-                    else existing.join(
-                        F.broadcast(upd_keys), key_cols, "left_semi"
-                    )
-                )
-                .select(*partition_cols)
-                .distinct()
+                _null_safe_semi(existing, key_set, key_cols)
+                if null_safe_keys
+                else existing.join(F.broadcast(key_set), key_cols, "left_semi")
             )
-            touched = touched.unionByName(prior).distinct()
-        touched_rows = touched.collect()  # one small row per partition
-        touched_tuples = {
-            _partition_tuple(row, partition_cols) for row in touched_rows
-        }
-        # Partitions with no live directory hold nothing to merge —
-        # drop them from the read side. A time-ordered stream
-        # appending new buckets usually leaves this set empty, and the
-        # staged write then degenerates to a pure write of updates.
-        live = {
-            tuple(
-                unquote(p.split("=", 1)[1])
-                for p in leaf.relative_to(path).parts
-            )
-            for leaf in _leaf_partition_dirs(path, partition_cols)
-        }
-        merge_tuples = touched_tuples & live
-        if not merge_tuples:
-            affected = None
-        elif (
-            _literal_ok(touched_rows, partition_cols)
-            and len(merge_tuples) <= _MAX_LITERAL_PARTITIONS
-        ):
-            affected = existing.filter(
-                _partition_pred(partition_cols, merge_tuples)
-            )
-        else:
-            affected = _null_safe_semi(existing, touched, partition_cols)
+            scope = scope.unionByName(prior.select(*partition_cols))
+        touched = _touched(scope, partition_cols)
+        leaves = [
+            str(leaf)
+            for vals, leaf in _leaf_partition_dirs(path, partition_cols).items()
+            if vals in touched
+        ]
+        affected = reader.parquet(*leaves) if leaves else None
     else:
-        affected = existing
+        affected = reader.parquet(str(path))
 
-    if affected is None:
-        merged = updates.select(*existing.columns)
-    else:
-        key_set = updates.select(*key_cols).distinct()
+    merged = batch
+    if affected is not None:
         kept = (
             _null_safe_anti(affected, key_set, key_cols)
             if null_safe_keys
             else affected.join(key_set, key_cols, "left_anti")
         )
-        merged = kept.unionByName(updates.select(*existing.columns))
+        merged = kept.unionByName(batch)
 
-    if _STAGED_PLAN_HOOK is not None:
-        _STAGED_PLAN_HOOK(merged)
     staging = path.parent / f".staging_{table}_{uuid.uuid4().hex[:8]}"
     writer = merged.write.mode("overwrite")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(str(staging))
-    _swap_staged(staging, path, partition_cols, touched_tuples)
+    _swap_staged(staging, path, partition_cols, touched)
 
 
 def _swap_staged(
     staging: Path,
     path: Path,
     partition_cols: list[str],
-    touched_tuples: set[tuple[str, ...]] | None,
+    touched: set[tuple[str, ...]] | None,
 ) -> None:
     """Swap staged partition dirs into the live table at the full
     partition-tuple granularity (or the whole table when
@@ -327,13 +287,11 @@ def _swap_staged(
     touched by this batch. The per-directory swap is not atomic across
     partitions: a crash mid-loop leaves some partitions updated and
     some not (each individual partition is still consistent, and
-    re-running the same batch heals the table — asserted in tests); on
-    a cluster use Delta MERGE (below) or partitionOverwriteMode=dynamic
-    for transactional semantics."""
+    re-running the same batch heals the table — asserted in tests); for
+    transactional commits use ``sources/snapshots.py``."""
     if partition_cols:
         staged = _leaf_partition_dirs(staging, partition_cols)
-        staged_rels = {leaf.relative_to(staging) for leaf in staged}
-        for leaf in staged:
+        for leaf in staged.values():
             dest = path / leaf.relative_to(staging)
             if dest.exists():
                 shutil.rmtree(dest)
@@ -343,15 +301,12 @@ def _swap_staged(
         # A touched partition that ended up with zero rows (its only keys
         # moved elsewhere or were erased) produces no staging dir —
         # remove the stale one.
-        for leaf in _leaf_partition_dirs(path, partition_cols):
-            rel = leaf.relative_to(path)
-            vals = tuple(unquote(p.split("=", 1)[1]) for p in rel.parts)
-            if vals in (touched_tuples or set()) and rel not in staged_rels:
+        for vals, leaf in _leaf_partition_dirs(path, partition_cols).items():
+            if vals in (touched or set()) and vals not in staged:
                 shutil.rmtree(leaf)
     else:
         shutil.rmtree(path)
         shutil.move(str(staging), str(path))
-
 
 def cleanup_staging(warehouse_dir: str, older_than_s: float = 86400.0) -> list[str]:
     """Remove orphaned staging directories left by a crash mid-swap
@@ -395,39 +350,38 @@ def erase_keys(
 
     Scale shape: the key set broadcasts (an erasure batch is small by
     nature); locating affected partitions is one column-pruned semi-join
-    over (key, partition) columns; the rewrite is bounded by the
-    affected partitions' size, never the table's. The audit trail (how
-    many rows were erased) comes from partition-local counts of the
-    same frames the rewrite uses — no extra full scan.
+    over (key, partition) columns whose result is collected (one row per
+    touched partition); the rewrite reads only those partitions' leaf
+    directories, so it is bounded by their size, never the table's. The
+    audit trail (how many rows were erased) comes from partition-local
+    counts of the same frames the rewrite uses — no extra full scan.
 
-    Every key comparison here is NULL-SAFE (eqNullSafe), matching the
-    deliberately null-safe partition matching: with plain equality a
-    row whose key columns contain NULL could never be erased — a
-    silent no-op in a right-to-erasure operator (round-4 advice).
+    Every key comparison here is NULL-SAFE (eqNullSafe): with plain
+    equality a row whose key columns contain NULL could never be erased
+    — a silent no-op in a right-to-erasure operator. Partition values
+    follow the module's one rule (a value is its directory name).
     """
     path = _table_path(warehouse_dir, table)
     partition_cols = partition_cols or []
     if not path.exists():
         return 0
-    existing = spark.read.parquet(str(path))
-    key_set = keys.select(*key_cols).distinct()
+    reader, _ = _dirname_reader(spark, path, partition_cols)
+    existing = reader.parquet(str(path))
+    key_set = _as_dirnames(keys.select(*key_cols), partition_cols).distinct()
 
+    touched: set[tuple[str, ...]] | None = None
+    affected = existing
     if partition_cols:
-        prior = (
-            _null_safe_semi(existing, key_set, key_cols)
-            .select(*partition_cols)
-            .distinct()
+        touched = _touched(
+            _null_safe_semi(existing, key_set, key_cols), partition_cols
         )
-        touched_tuples = {
-            _partition_tuple(row, partition_cols)
-            for row in prior.collect()
-        }
-        if not touched_tuples:
+        if not touched:
             return 0
-        affected = _null_safe_semi(existing, prior, partition_cols)
-    else:
-        touched_tuples = None
-        affected = existing
+        affected = reader.parquet(*(
+            str(leaf)
+            for vals, leaf in _leaf_partition_dirs(path, partition_cols).items()
+            if vals in touched
+        ))
 
     kept = _null_safe_anti(affected, key_set, key_cols)
     removed = affected.count() - kept.count()
@@ -439,21 +393,8 @@ def erase_keys(
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(str(staging))
-    _swap_staged(staging, path, partition_cols, touched_tuples)
+    _swap_staged(staging, path, partition_cols, touched)
     return removed
-
-
-def _leaf_partition_dirs(root: Path, partition_cols: list[str]) -> list[Path]:
-    """Descend ``col=value`` directory levels to the deepest partition dirs."""
-    level = [root]
-    for col in partition_cols:
-        level = [
-            child
-            for d in level
-            for child in d.iterdir()
-            if child.is_dir() and child.name.startswith(f"{col}=")
-        ]
-    return level
 
 
 def compact_table(
@@ -474,36 +415,36 @@ def compact_table(
     shuffle keyed on (partition cols, salt) where the salt width is
     each partition's target bucket count, so a 10-TB partition fans out
     to ~80 × 128 MB files while a 1-KB partition collapses to one, in
-    the same job. Row content is preserved exactly; only file layout
-    changes.
+    the same job. Row content and partition directory names are
+    preserved exactly; only file layout changes.
     """
-    import math
-
     path = _table_path(warehouse_dir, table)
-    df = spark.read.parquet(str(path))
     partition_cols = partition_cols or []
+    reader, columns = _dirname_reader(spark, path, partition_cols)
+    df = reader.parquet(str(path))
 
-    def _dir_bytes(d: Path) -> int:
-        return sum(f.stat().st_size for f in d.rglob("*.parquet"))
+    def _n_files(d: Path) -> int:
+        size = sum(f.stat().st_size for f in d.rglob("*.parquet"))
+        return max(1, math.ceil(size / target_file_bytes))
 
     staging = path.parent / f".compact_{table}_{uuid.uuid4().hex[:8]}"
+    touched: set[tuple[str, ...]] | None = None
     if partition_cols:
-        buckets = [
-            (
-                *(unquote(p.split("=", 1)[1]) for p in leaf.relative_to(path).parts),
-                max(1, math.ceil(_dir_bytes(leaf) / target_file_bytes)),
-            )
-            for leaf in _leaf_partition_dirs(path, partition_cols)
-        ]
+        leaves = _leaf_partition_dirs(path, partition_cols)
+        touched = set(leaves)
         bmap = spark.createDataFrame(
-            buckets, [*partition_cols, "__n_buckets__"]
+            [
+                (*(None if v == _HIVE_NULL else v for v in vals), _n_files(leaf))
+                for vals, leaf in leaves.items()
+            ],
+            StructType([
+                *(StructField(c, StringType()) for c in partition_cols),
+                StructField("__n_buckets__", LongType()),
+            ]),
         )
-        # partition cols parse as strings from dir names; align types
-        for c in partition_cols:
-            bmap = bmap.withColumn(c, F.col(c).cast(df.schema[c].dataType))
-        data_cols = [c for c in df.columns if c not in partition_cols]
+        data_cols = [c for c in columns if c not in partition_cols]
         salted = (
-            df.join(F.broadcast(bmap), partition_cols)
+            _null_safe_join(df, bmap, partition_cols, "inner")
             .withColumn(
                 "__salt__",
                 F.pmod(F.xxhash64(*data_cols), F.col("__n_buckets__")),
@@ -515,36 +456,12 @@ def compact_table(
             str(staging)
         )
     else:
-        n = max(1, math.ceil(_dir_bytes(path) / target_file_bytes))
-        df.repartition(n).write.mode("overwrite").parquet(str(staging))
+        df.repartition(_n_files(path)).write.mode("overwrite").parquet(
+            str(staging)
+        )
 
-    shutil.rmtree(path)
-    shutil.move(str(staging), str(path))
+    _swap_staged(staging, path, partition_cols, touched)
     return len(list(path.rglob("*.parquet")))
-
-
-def merge_into_delta(
-    spark: SparkSession,
-    updates: DataFrame,
-    table: str,
-    key_cols: list[str],
-) -> bool:
-    """Real Delta ``MERGE INTO`` when delta-spark is installed; returns
-    False (caller should use :func:`upsert_by_key`) when it is not."""
-    try:
-        from delta.tables import DeltaTable  # type: ignore
-    except ImportError:
-        return False
-    target = DeltaTable.forName(spark, table)
-    cond = " AND ".join(f"t.{c} = s.{c}" for c in key_cols)
-    (
-        target.alias("t")
-        .merge(updates.alias("s"), cond)
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
-    return True
 
 
 def overwrite_partitions_dynamic(

@@ -66,87 +66,3 @@ def running_user_totals(events: DataFrame) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def _has_tws_runtime() -> bool:
-    """transformWithStateInPandas drives a Python state-server protocol
-    that needs google.protobuf at runtime; absent in this container
-    (same environmental class as delta-spark — the operator below is
-    complete and its test activates the moment protobuf is installed).
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_user_stats_tws(events: DataFrame) -> DataFrame:
-    """Per-user running stats on the transformWithState API (Spark
-    4.x's successor to applyInPandasWithState): typed ValueState,
-    explicit processor lifecycle (init/handleInputRows/close), and —
-    in production — per-state TTL and event/processing-time timers
-    that GroupState never offered. Semantics here mirror
-    running_user_totals plus first_ts, so with availableNow over
-    finite input the final update per user equals the batch aggregate
-    (COUNT/SUM/MIN/MAX of ts).
-
-    Raises ImportError with a clear message when the protobuf runtime
-    is missing rather than crashing inside the JVM's state server.
-    """
-    if not _has_tws_runtime():
-        raise ImportError(
-            "transformWithStateInPandas requires google.protobuf "
-            "(state-server protocol); pip install protobuf to enable"
-        )
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class UserStats(StatefulProcessor):
-        def init(self, handle) -> None:
-            self.totals = handle.getValueState(
-                "totals", "n long, s double, first bigint, last bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            if self.totals.exists():
-                n, s, first_us, last_us = self.totals.get()
-            else:
-                n, s, first_us, last_us = 0, 0.0, None, None
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-                if len(pdf):
-                    us = (
-                        pdf["ts"]
-                        .to_numpy()
-                        .astype("datetime64[us]")
-                        .astype("int64")
-                    )
-                    mn, mx = int(us.min()), int(us.max())
-                    first_us = mn if first_us is None else min(first_us, mn)
-                    last_us = mx if last_us is None else max(last_us, mx)
-            self.totals.update((n, s, first_us, last_us))
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_events": [n],
-                    "sum_value": [s],
-                    "first_ts": [pd.Timestamp(first_us, unit="us")],
-                    "last_ts": [pd.Timestamp(last_us, unit="us")],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserStats(),
-        outputStructType=(
-            "user_id long, n_events long, sum_value double, "
-            "first_ts timestamp, last_ts timestamp"
-        ),
-        outputMode="Update",
-        timeMode="None",
-    )

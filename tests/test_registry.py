@@ -20,8 +20,9 @@ WINDOW = 50
 # (round-6 advice). Round-15 rule (r14 verdict task 2): the 18 queries
 # whose operator code changed this round lead the window so the
 # driver's oracle re-checks every modified path, then the stalest-green
-# cohort (last hash-checked r09) fills the remaining 32 slots — see
-# registry.py.
+# cohort (last hash-checked r09) fills the remaining slots — see
+# registry.py. The erase and compaction drives were added to the lead
+# when their writers changed.
 PREVIOUSLY_UNCHECKED = [
     "stream_rank_maintenance",
     "stream_rank_repair",
@@ -29,6 +30,8 @@ PREVIOUSLY_UNCHECKED = [
     "stream_gold_incremental",
     "stream_cdc_incremental",
     "stream_image_dedup_incremental",
+    "warehouse_erase_rtbf",
+    "warehouse_compact_small_files",
     "er_resolved_entities",
     "graph_part_pagerank",
     "graph_part_bfs_hops",
@@ -71,8 +74,6 @@ PREVIOUSLY_UNCHECKED = [
     "stream_session_window_stats",
     "stream_sliding_window_counts",
     "stream_stream_click_attribution",
-    "stream_tumbling_daily_counts",
-    "text_bpe_token_count",
 ]
 
 

@@ -199,46 +199,6 @@ def test_chained_dedup_then_agg_equals_cutoff_distinct(spark):
     assert got.count() < full_days
 
 
-def test_transform_with_state_totals_equal_batch(spark):
-    """transformWithState per-user stats == batch aggregate. Skips when
-    google.protobuf is absent (the TWS state-server protocol needs it;
-    same environmental class as the delta-spark skip)."""
-    import pytest
-
-    from market_data_pipeline_databricks_spark.streaming.stateful import (
-        _has_tws_runtime,
-        running_user_stats_tws,
-    )
-
-    if not _has_tws_runtime():
-        with pytest.raises(ImportError, match="protobuf"):
-            running_user_stats_tws(read_event_stream(spark, SF_SMALL))
-        pytest.skip("google.protobuf not installed — TWS runtime unavailable")
-
-    ev_stream = read_event_stream(spark, SF_SMALL)
-    totals = run_available_now(
-        running_user_stats_tws(ev_stream), "t_tws", output_mode="update"
-    )
-    w = __import__("pyspark.sql", fromlist=["Window"]).Window.partitionBy(
-        "user_id"
-    ).orderBy(F.desc("n_events"))
-    got = (
-        totals.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events", F.round("sum_value", 6).alias("sum_value"),
-                "first_ts", "last_ts")
-    )
-    ev = read_events(spark, SF_SMALL)
-    want = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 6).alias("sum_value"),
-        F.min("ts").alias("first_ts"),
-        F.max("ts").alias("last_ts"),
-    )
-    cols = ["user_id", "n_events", "first_ts", "last_ts"]
-    assert _rows(got, cols) == _rows(want, cols)
-
-
 def test_stream_cdc_incremental_equals_batch(spark):
     """Three micro-batched crawl drops probing the static corpus chunk
     index must reproduce the batch incremental-CDC output exactly —

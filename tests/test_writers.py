@@ -85,74 +85,6 @@ def test_upsert_stable_partitions_fast_path(spark, tmp_path):
     ]
 
 
-def test_merge_into_delta_fallback_signal(spark):
-    """Without delta-spark installed, ``merge_into_delta`` must report
-    False (not raise) so callers fall through to ``upsert_by_key``."""
-    import importlib.util
-
-    from market_data_pipeline_databricks_spark.sources.writers import (
-        merge_into_delta,
-    )
-
-    if importlib.util.find_spec("delta") is not None:
-        return  # real path covered by test_merge_into_delta_end_to_end
-    df = _rows(spark, [("A", "us", D1, 1.0)])
-    assert merge_into_delta(spark, df, "missing_table", ["sym"]) is False
-
-
-def test_merge_into_delta_end_to_end(tmp_path):
-    """Real Delta ``MERGE INTO`` (reference 01_ingest_bronze.py:93-107):
-    update-all-columns-on-match, insert-on-no-match, idempotent re-run.
-
-    Skipped in this container (no delta-spark package and the shared
-    test JVM starts without the Delta jars). On OSS Spark + Delta run
-    it standalone: ``pytest tests/test_writers.py -k end_to_end``.
-    """
-    import importlib.util
-
-    import pytest
-
-    if importlib.util.find_spec("delta") is None:
-        pytest.skip("delta-spark not installed in this environment")
-    from pyspark.sql import SparkSession
-
-    active = SparkSession.getActiveSession()
-    if active is not None and "io.delta" not in active.conf.get(
-        "spark.sql.extensions", ""
-    ):
-        pytest.skip("shared JVM started without Delta jars; run standalone")
-
-    from delta import configure_spark_with_delta_pip
-
-    from market_data_pipeline_databricks_spark.sources.writers import (
-        merge_into_delta,
-    )
-
-    builder = (
-        SparkSession.builder.master("local[2]")
-        .config("spark.sql.warehouse.dir", str(tmp_path / "wh"))
-        .config(
-            "spark.sql.extensions",
-            "io.delta.sql.DeltaSparkSessionExtension",
-        )
-        .config(
-            "spark.sql.catalog.spark_catalog",
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-        )
-    )
-    spark = configure_spark_with_delta_pip(builder).getOrCreate()
-    base = _rows(spark, [("A", "us", D1, 1.0), ("B", "eu", D1, 2.0)])
-    base.write.format("delta").saveAsTable("t_delta")
-    batch = _rows(spark, [("A", "us", D1, 9.0), ("C", "eu", D1, 3.0)])
-    assert merge_into_delta(spark, batch, "t_delta", ["sym"]) is True
-    # idempotent: same batch again is a no-op on final state
-    assert merge_into_delta(spark, batch, "t_delta", ["sym"]) is True
-    got = sorted(
-        (r["sym"], r["px"]) for r in spark.table("t_delta").collect()
-    )
-    assert got == [("A", 9.0), ("B", 2.0), ("C", 3.0)]
-
-
 def test_upsert_rerun_heals_partial_swap(spark, tmp_path):
     """The per-partition swap is not atomic; simulate a crash that left
     one partition un-swapped and assert that re-running the same batch
